@@ -2,10 +2,11 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "value_with_build": ..., "sf": ..., "queries_n": ..., "detail": ...}.
-Per-query timings live in BENCH_DETAIL.json next to this file — the
-driver parses only a 2000-char stdout tail, so the printed line is kept
-small by contract (round-6 VERDICT #2: the inline per-query map outgrew
-the tail and the round recorded no bench value).
+Per-query timings live in BENCH_DETAIL_c{cpus}.json next to this file,
+one per core count — the consumer of the printed line parses only a
+2000-char stdout tail, so that line is kept small by contract (round-6
+VERDICT #2: the inline per-query map outgrew the tail and the round
+recorded no bench value).
 
 Each query is forced with a noop-format write (full computation, no
 driver-side collect) after a warmup of the session on a trivial action.
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -152,6 +154,23 @@ HEADLINE = [
 ]
 
 
+def detail_path() -> str:
+    """This run's detail file, named by its core count: runs at
+    different core counts never overwrite each other's."""
+    return os.path.join(
+        _REPO_ROOT, f"BENCH_DETAIL_c{default_parallelism()}.json")
+
+
+def _git_sha() -> str | None:
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=_REPO_ROOT,
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("kuibadb-bench")
@@ -207,12 +226,10 @@ def main() -> None:
     # shared detail filename meant the 8-core run clobbered the 32-core
     # per-query map before the driver's comparison ran — PERF_r10 came
     # back with n_common=0 and an empty scaling block). The cpu-suffixed
-    # file is authoritative (named in the printed line's `detail` field);
-    # the legacy unsuffixed BENCH_DETAIL.json keeps being written with
-    # identical content so fixed-name readers (tools/sf100bench.py,
-    # tools/sf1bench.py baselines) stay working.
-    cpus = default_parallelism()
-    detail_name = f"BENCH_DETAIL_c{cpus}.json"
+    # file is the only one written (named in the printed line's `detail`
+    # field); tools/sf1bench.py and tools/sf100bench.py read the twin of
+    # their own core count.
+    detail_name = os.path.basename(detail_path())
     summary = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
@@ -233,10 +250,15 @@ def main() -> None:
     # 62-query inline map outgrew it — BENCH_r06.json recorded
     # "parsed": null, i.e. no bench value at all (round-6 VERDICT #2).
     # The final printed line must stay a few hundred bytes forever.
-    detail = {**summary, "queries": timings, "build": builds}
-    for fname in (detail_name, "BENCH_DETAIL.json"):
-        with open(os.path.join(_REPO_ROOT, fname), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
+    detail = {
+        **summary,
+        "git_sha": _git_sha(),
+        "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "queries": timings,
+        "build": builds,
+    }
+    with open(detail_path(), "w") as f:
+        json.dump(detail, f, indent=1, sort_keys=True)
     line = json.dumps(summary)
     assert len(line) < 1500, f"bench summary line too long ({len(line)})"
     print(line)

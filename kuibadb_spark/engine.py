@@ -143,6 +143,10 @@ _COPY_HEAD_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
+# the source-file column of a DML scan (input_file_name(), see
+# Engine._rows_by_file)
+_FILE = "__kb_file"
+
 
 def _parse_copy_options(tail: str) -> dict:
     """Order-insensitive COPY option tail, mirroring the reference's
@@ -339,48 +343,46 @@ class Engine:
         m = _REFRESH_MV_RE.match(text)
         if m:
             refreshed = self.refresh_materialized_view(m.group(1))
-            return self.spark.createDataFrame([(refreshed,)], "refreshed BOOLEAN")
+            return self._local_df("refreshed BOOLEAN", [(refreshed,)])
         m = _OPTIMIZE_RE.match(text)
         if m:
             zcols = [c.strip() for c in m.group(2).split(",")] if m.group(2) else None
             n = self.compact(m.group(1), target_files=4, zorder_by=zcols)
-            return self.spark.createDataFrame([(n,)], "files BIGINT")
+            return self._local_df("files BIGINT", [(n,)])
         m = _VACUUM_RE.match(text)
         if m:
             n = self.gc(m.group(1))
-            return self.spark.createDataFrame([(n,)], "removed BIGINT")
+            return self._local_df("removed BIGINT", [(n,)])
         m = _ANALYZE_RE.match(text)
         if m and self._table_exists(m.group(1)):
             st = self.analyze(m.group(1))
-            return self.spark.createDataFrame(
-                [(st["rows"],)], "rows BIGINT"
-            )
+            return self._local_df("rows BIGINT", [(st["rows"],)])
         m = _HISTORY_RE.match(text)
         if m and self._table_exists(m.group(1)):
-            return self.spark.createDataFrame(
-                self.history(m.group(1)),
+            return self._local_df(
                 "version INT, n_files INT, schema STRING, available BOOLEAN",
+                self.history(m.group(1)),
             )
         m = _DESCRIBE_RE.match(text)
         if m and self._table_exists(m.group(1)):
-            return self.spark.createDataFrame(
-                [(d["column"], d["type"], d["not_null"]) for d in self.describe(m.group(1))],
+            return self._local_df(
                 "column STRING, type STRING, not_null BOOLEAN",
+                [(d["column"], d["type"], d["not_null"]) for d in self.describe(m.group(1))],
             )
         m = _SHOW_RE.match(text)
         if m:
             name = m.group(1).lower()
             if name == "tables":
-                return self.spark.createDataFrame(
-                    [(t,) for t in self.tables()] or [], "table_name STRING"
+                return self._local_df(
+                    "table_name STRING", [(t,) for t in self.tables()]
                 )
             if name == "all":
-                return self.spark.createDataFrame(
-                    self.gucs.show_all(), "name STRING, setting STRING"
+                return self._local_df(
+                    "name STRING, setting STRING", self.gucs.show_all()
                 )
             if self.gucs.is_declared(name):
-                return self.spark.createDataFrame(
-                    [(_guc_fmt(self.gucs.show(name)),)], f"{name} STRING"
+                return self._local_df(
+                    f"{name} STRING", [(_guc_fmt(self.gucs.show(name)),)]
                 )
             # not a GUC → Spark's own SHOW (TABLES/DATABASES/…)
         m = _CTAS_RE.match(text)
@@ -390,7 +392,7 @@ class Engine:
             src = self.spark.sql(body)
             self.create_table(name, src.schema)
             n = self.insert(name, src)
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._local_df("count BIGINT", [(n,)])
         m = _CREATE_RE.match(text)
         if m:
             # column list à la the reference's grammar (tablecmds.rs:103-148):
@@ -429,7 +431,7 @@ class Engine:
             schema = T.StructType.fromDDL(self._read_m(name)["schema"])
             # positional column matching, like INSERT without a column list
             n = self.insert(name, src.toDF(*[f.name for f in schema.fields]))
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._local_df("count BIGINT", [(n,)])
         m = _ALTER_RE.match(text)
         if m:
             if m.group(2):
@@ -457,7 +459,7 @@ class Engine:
                     parallel=o.get("parallel"),
                     csv=o.get("csv", False),
                 )
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._local_df("count BIGINT", [(n,)])
         if re.match(r"^\s*COPY\b", text, re.IGNORECASE):
             raise SqlSyntaxError(f"unsupported COPY syntax: {text.strip()[:80]!r}")
         m = _MERGE_RE.match(text)
@@ -475,13 +477,12 @@ class Engine:
                 name, src, [k.strip() for k in keys.split(",")],
                 update=do_update, insert=do_insert,
             )
-            return self.spark.createDataFrame(
-                [(upd, ins)], "updated BIGINT, inserted BIGINT"
-            )
+            return self._local_df("updated BIGINT, inserted BIGINT",
+                                  [(upd, ins)])
         m = _DELETE_RE.match(text)
         if m and m.group(1).upper() != "SELECT":
             n = self.delete(m.group(1), m.group(2) or "true")
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._local_df("count BIGINT", [(n,)])
         m = _UPDATE_RE.match(text)
         if m:
             assignments = {}
@@ -489,7 +490,7 @@ class Engine:
                 col, expr = part.split("=", 1)
                 assignments[col.strip()] = expr.strip()
             n = self.update(m.group(1), assignments, m.group(3) or "true")
-            return self.spark.createDataFrame([(n,)], "count BIGINT")
+            return self._local_df("count BIGINT", [(n,)])
         self._register_all()
         # time travel: rewrite `t FOR VERSION AS OF n` to a temp view
         # pinned to that manifest version (Engine.table(version=n))
@@ -695,6 +696,23 @@ class Engine:
         with open(staging + ".staged", "w") as f:
             f.write(str(time.time()))
         return staging
+
+    def _write_staged(self, tdir: str, df: DataFrame,
+                      prefix: str = "stg") -> tuple[str, list[str], dict, int]:
+        """Every write's stage → write → list → footer-stats sequence:
+        returns (staging dir, new parquet files, their zone-map stats,
+        rows written). The row count is summed from the footers the
+        stats pass opens anyway, so no write runs a count() job for its
+        command tag. Taken BEFORE _publish renames stg-* → seg-*."""
+        staging = self._stage(tdir, prefix)
+        df.write.mode("overwrite").parquet(staging)
+        files = [
+            os.path.join(staging, f)
+            for f in os.listdir(staging)
+            if f.endswith(".parquet")
+        ]
+        stats, rows = zonemap.collect_file_stats(files)
+        return staging, files, stats, rows
 
     @staticmethod
     def _finalize_seg_dirs(segs: list[str]) -> list[tuple[str, str]]:
@@ -1139,14 +1157,16 @@ class Engine:
             from kuibadb_spark.sources.copy import auto_copy_parallel
 
             parallel = auto_copy_parallel(self.spark, path)
-        if parallel:
+        # width 1 over a one-partition scan writes one file either way;
+        # skipping the repartition saves its shuffle (2 jobs)
+        if parallel and not (parallel == 1
+                             and df.rdd.getNumPartitions() == 1):
             df = df.repartition(parallel)
 
-        staging = self._stage(tdir)
         try:
             check_not_null(df, m["not_null"])
             check_constraint(df, m["props"].get("check"))
-            df.write.mode("overwrite").parquet(staging)
+            staging, new_files, stats, n = self._write_staged(tdir, df)
         except Exception as e:
             # fast-path reader failure → re-derive the reference's counted
             # column-count diagnostic; if counts are clean the failure was
@@ -1156,16 +1176,7 @@ class Engine:
 
                 diagnose_bad_lines(self.spark, path, schema, delimiter)
             raise
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
-        # metadata-only count (parquet row counts) taken BEFORE the
-        # publish renames stg-* → seg-* (round-6 streaming review)
-        n = self.spark.read.parquet(*new_files).count() if new_files else 0
-        self._publish(name, m["version"], append=new_files,
-                      stats=zonemap.collect_file_stats(new_files),
+        self._publish(name, m["version"], append=new_files, stats=stats,
                       segs=[staging])
         return n
 
@@ -1217,21 +1228,10 @@ class Engine:
         aligned = df.select(
             *[df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-        from kuibadb_spark.sources.copy import check_not_null
-
         check_not_null(aligned, m["not_null"])
         check_constraint(aligned, m["props"].get("check"))
-        staging = self._stage(tdir)
-        aligned.write.mode("overwrite").parquet(staging)
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
-        # count before publishing — _publish renames stg-* → seg-*
-        n = self.spark.read.parquet(*new_files).count() if new_files else 0
-        self._publish(name, m["version"], append=new_files,
-                      stats=zonemap.collect_file_stats(new_files),
+        staging, new_files, stats, n = self._write_staged(tdir, aligned)
+        self._publish(name, m["version"], append=new_files, stats=stats,
                       segs=[staging], props_update=props_update)
         return n
 
@@ -1247,24 +1247,16 @@ class Engine:
         3-valued logic: rows are removed only where the predicate is TRUE;
         FALSE and NULL rows are kept (PG DELETE semantics). Returns the
         deleted row count (`DELETE n`)."""
-        touched, untouched, df, m = self._touched_files(name, where)
+        touched, untouched, df, m, deleted = self._touched_files(name, where)
         if not touched:
             return 0
         from pyspark.sql import functions as F
 
-        tdir = self._table_dir(name)
-        deleted = df.filter(F.expr(where)).count()
         kept = df.filter(~F.expr(where).eqNullSafe(F.lit(True)))
-        staging = self._stage(tdir)
-        kept.write.mode("overwrite").parquet(staging)
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
+        staging, new_files, stats, _ = self._write_staged(
+            self._table_dir(name), kept)
         self._publish(name, m["version"], replace=untouched + new_files,
-                      stats=zonemap.collect_file_stats(new_files),
-                      segs=[staging])
+                      stats=stats, segs=[staging])
         return deleted
 
     def update(self, name: str, set: dict[str, str], where: str = "true") -> int:
@@ -1272,17 +1264,15 @@ class Engine:
         touched files only, same shape as delete(). SET expressions are
         SQL strings evaluated per matching row; non-matching rows in a
         touched file are rewritten unchanged. Returns updated row count."""
-        touched, untouched, df, m = self._touched_files(name, where)
+        touched, untouched, df, m, updated = self._touched_files(name, where)
         if not touched:
             return 0
         from pyspark.sql import functions as F
 
-        tdir = self._table_dir(name)
         schema = _phys_schema(m["schema"])
         bad = set.keys() - {f.name for f in schema.fields}
         if bad:
             raise ValueError(f"unknown columns in SET: {sorted(bad)}")
-        updated = df.filter(F.expr(where)).count()
         match = F.expr(where).eqNullSafe(F.lit(True))
         out = df.select(
             *[
@@ -1298,16 +1288,10 @@ class Engine:
         )
         check_not_null(out, m["not_null"])
         check_constraint(out, m["props"].get("check"))
-        staging = self._stage(tdir)
-        out.write.mode("overwrite").parquet(staging)
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
+        staging, new_files, stats, _ = self._write_staged(
+            self._table_dir(name), out)
         self._publish(name, m["version"], replace=untouched + new_files,
-                      stats=zonemap.collect_file_stats(new_files),
-                      segs=[staging])
+                      stats=stats, segs=[staging])
         return updated
 
     def merge(self, name: str, source: DataFrame, on: list[str],
@@ -1344,83 +1328,69 @@ class Engine:
             if m["files"]
             else self.spark.createDataFrame([], schema)
         )
-        # keys stay target-free: input_file_name() below requires a
-        # single parquet source in its plan, so the source keyset must
-        # not have the target scan in its lineage
         keys = aligned.select(*on).distinct()
-        matched = full.join(keys, on, "semi")  # AQE broadcasts small key sets
         if not update:
             # WHEN NOT MATCHED only: pure append of new-key source rows —
             # no target file is rewritten
             to_insert = aligned.join(full.select(*on), on, "anti")
-            # count the rows actually appended — with duplicate keys in
-            # the source, every unmatched source row is written, so a
-            # distinct-key count would under-report
-            inserted = to_insert.count()
-            staging = self._stage(tdir)
-            to_insert.write.mode("overwrite").parquet(staging)
-            new_files = [
-                os.path.join(staging, f)
-                for f in os.listdir(staging)
-                if f.endswith(".parquet")
-            ]
-            self._publish(name, m["version"], append=new_files,
-                          stats=zonemap.collect_file_stats(new_files),
+            # the rows actually appended, from the write's footers — with
+            # duplicate keys in the source, every unmatched source row is
+            # written, so a distinct-key count would under-report
+            staging, new_files, stats, inserted = self._write_staged(
+                tdir, to_insert)
+            self._publish(name, m["version"], append=new_files, stats=stats,
                           segs=[staging])
             return 0, inserted
-        updated = matched.count()
+        # one grouped execution yields both the hit files and the matched
+        # row count. The file name is taken AT the scan: the semi join may
+        # shuffle (a source without size stats is not broadcast), and
+        # input_file_name() above a shuffle reads ''
+        hits = self._rows_by_file(
+            full.select(*on, F.input_file_name().alias(_FILE))
+            .join(keys, on, "semi"),
+            m["files"],
+        )
+        updated = sum(hits.values())
         # rows actually inserted = source rows whose key is absent from
         # the target (all of them are written below via `out`), counted
         # row-level for the same duplicate-key reason as the insert-only
-        # path — and it's one job where the old key-level form took two
+        # path
         inserted = (
             aligned.join(full.select(*on), on, "anti").count()
             if insert else 0
         )
         if not insert:
             # WHEN MATCHED only: restrict the written source rows to keys
-            # present in the target (applied HERE, at write time — the
-            # matched/file-hit plans above must stay single-source)
+            # present in the target
             aligned = aligned.join(full.select(*on), on, "semi")
 
-        hit_uris = {
-            r["__f"]
-            for r in matched.select(F.input_file_name().alias("__f"))
-            .distinct()
-            .collect()
-        }
-        from urllib.parse import unquote, urlparse
-
-        hit_paths = {unquote(urlparse(u).path) if "://" in u else u for u in hit_uris}
-        touched = [f for f in m["files"] if f in hit_paths or f in hit_uris]
-        untouched = [f for f in m["files"] if f not in set(touched)]
-
+        touched = [f for f in m["files"] if f in hits]
+        untouched = [f for f in m["files"] if f not in hits]
         survivors = (
             self.spark.read.schema(schema).parquet(*touched).join(keys, on, "anti")
             if touched
             else self.spark.createDataFrame([], schema)
         )
-        out = survivors.unionByName(aligned)
-        staging = self._stage(tdir)
-        out.write.mode("overwrite").parquet(staging)
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
+        staging, new_files, stats, _ = self._write_staged(
+            tdir, survivors.unionByName(aligned))
         self._publish(name, m["version"], replace=untouched + new_files,
-                      stats=zonemap.collect_file_stats(new_files),
-                      segs=[staging])
+                      stats=stats, segs=[staging])
         return updated, inserted
 
     def _touched_files(self, name: str, where: str):
         """Split the current snapshot's files into (touched, untouched) by
-        whether any row matches `where` — ONE distributed job: the scan
-        gets the predicate pushed down and the distinct file list shipped
-        back is metadata-sized (file names, not rows).
+        whether any row matches `where`, and count the matching rows —
+        ONE grouped scan: the predicate is pushed down and what ships
+        back is metadata-sized (one (file, count) pair per hit file).
+        Files the zone maps rule out are never read, the read path's
+        pruning (plans/zonemap.py); with no candidate left there is no
+        scan at all (the predicate is still analyzed, so an invalid one
+        raises). Only TRUE rows match (a filter drops FALSE and
+        NULL alike).
 
-        Returns the manifest snapshot the split was computed FROM as the
-        fourth element: the caller's COW publish must use THIS snapshot's
+        Returns (touched, untouched, DataFrame over touched, manifest,
+        matching rows). The manifest is the snapshot the split was
+        computed FROM: the caller's COW publish must use THIS snapshot's
         version as its optimistic base (round-6 storage review) — a
         second read could see a concurrent commit's newer version, and
         validating against it would let a file list derived from the OLD
@@ -1429,28 +1399,43 @@ class Engine:
         from pyspark.sql import functions as F
 
         m = self._read_m(name)
-        if not m["files"]:
-            return [], [], None, m
+        files = m["files"]
         schema = _phys_schema(m["schema"])
-        full = self.spark.read.schema(schema).parquet(*m["files"])
-        hit_uris = {
-            r["__f"]
-            for r in full.filter(F.expr(where))
-            .select(F.input_file_name().alias("__f"))
-            .distinct()
-            .collect()
-        }
-        # input_file_name() returns URIs (file:///…, %-encoded); compare on
-        # the decoded path part
-        from urllib.parse import unquote, urlparse
-
-        hit_paths = {unquote(urlparse(u).path) if "://" in u else u for u in hit_uris}
-        touched = [f for f in m["files"] if f in hit_paths or f in hit_uris]
-        untouched = [f for f in m["files"] if f not in set(touched)]
+        cand = zonemap.prune(files, m.get("stats_by_file", {}), where)
+        if not cand:
+            # analyze the predicate all the same (no job): an invalid
+            # one raises as the read path's filter does
+            self.spark.createDataFrame([], schema).filter(F.expr(where))
+            return [], files, None, m, 0
+        # filter first, so the predicate still pushes into the scan
+        hits = self._rows_by_file(
+            self.spark.read.schema(schema).parquet(*cand)
+            .filter(F.expr(where))
+            .select(F.input_file_name().alias(_FILE)),
+            cand,
+        )
+        touched = [f for f in cand if f in hits]
+        untouched = [f for f in files if f not in hits]
         df = (
             self.spark.read.schema(schema).parquet(*touched) if touched else None
         )
-        return touched, untouched, df, m
+        return touched, untouched, df, m, sum(hits.values())
+
+    @staticmethod
+    def _rows_by_file(df: DataFrame, files: list[str]) -> dict[str, int]:
+        """{file in `files` → rows of `df` from it}, for the files holding
+        at least one row: one grouped execution over `df`'s _FILE column
+        (input_file_name() of the scan). Those are URIs (file:///…,
+        %-encoded); each is matched to `files` both as-is and by its
+        decoded path part."""
+        from urllib.parse import unquote, urlparse
+
+        by_uri: dict[str, int] = {}
+        for uri, n in df.groupBy(_FILE).count().collect():
+            by_uri[uri] = n
+            if "://" in uri:
+                by_uri[unquote(urlparse(uri).path)] = n
+        return {f: by_uri[f] for f in files if f in by_uri}
 
     def analyze(self, name: str) -> dict:
         """ANALYZE: collect table statistics (row count, per-column
@@ -1488,9 +1473,8 @@ class Engine:
             missing = [f for f in m["files"]
                        if f not in m.get("stats_by_file", {})]
             if missing:
-                m.setdefault("stats_by_file", {}).update(
-                    zonemap.collect_file_stats(missing)
-                )
+                stats_by_file, _ = zonemap.collect_file_stats(missing)
+                m.setdefault("stats_by_file", {}).update(stats_by_file)
 
         mf.update_props(tdir, _apply)
         return stats
@@ -1547,13 +1531,7 @@ class Engine:
         aligned = result.select(
             *[result[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-        staging = self._stage(tdir)
-        aligned.write.mode("overwrite").parquet(staging)
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
+        staging, new_files, stats, _ = self._write_staged(tdir, aligned)
         m2 = mf.read_manifest(tdir)
         # mv_deps rides the SAME locked swap as the data (round-6
         # storage review): a trailing unlocked _persist could clobber a
@@ -1561,8 +1539,7 @@ class Engine:
         # Routed through _publish so the staged dir is finalized into
         # the stream-visible seg-* namespace and a lost optimistic race
         # reclaims the staging (round-6 streaming review).
-        self._publish(name, m2["version"], replace=new_files,
-                      stats=zonemap.collect_file_stats(new_files),
+        self._publish(name, m2["version"], replace=new_files, stats=stats,
                       segs=[staging], props_update={"mv_deps": current})
         return True
 
@@ -1602,13 +1579,7 @@ class Engine:
                     for f in schema.fields
                 ]
             )
-            staging = self._stage(tdir)
-            aligned.write.mode("overwrite").parquet(staging)
-            new_files = [
-                os.path.join(staging, f)
-                for f in os.listdir(staging)
-                if f.endswith(".parquet")
-            ]
+            staging, new_files, stats, _ = self._write_staged(tdir, aligned)
             cur = mf.read_manifest(tdir)
             dep_v = mf.read_manifest(self._table_dir(dep))["version"]
             # dep stamp in the SAME locked swap as the data (round-6
@@ -1616,8 +1587,7 @@ class Engine:
             # unlocked trailing _persist here was the widest window;
             # via _publish for seg-* finalization + conflict reclaim
             self._publish(name, cur["version"], replace=new_files,
-                          stats=zonemap.collect_file_stats(new_files),
-                          segs=[staging],
+                          stats=stats, segs=[staging],
                           props_update={"mv_deps": {dep: dep_v}})
 
         return (
@@ -1662,7 +1632,6 @@ class Engine:
             return 0
         schema = _phys_schema(m["schema"])
         df = self.spark.read.schema(schema).parquet(*m["files"])
-        staging = self._stage(tdir, "compact")
         if zorder_by:
             df = self._with_zvalue(df, zorder_by)
             df = (
@@ -1678,14 +1647,8 @@ class Engine:
                    .sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(target_files)
-        df.write.mode("overwrite").parquet(staging)
-        new_files = [
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        ]
-        self._publish(name, m["version"], replace=new_files,
-                      stats=zonemap.collect_file_stats(new_files),
+        staging, new_files, stats, _ = self._write_staged(tdir, df, "compact")
+        self._publish(name, m["version"], replace=new_files, stats=stats,
                       segs=[staging])
         return len(new_files)
 
@@ -1933,18 +1896,35 @@ class Engine:
                     (t, f.name, f.dataType.simpleString(),
                      f.name in m["not_null"], i + 1)
                 )
-        self.spark.createDataFrame(
-            tables_rows or [], "relname STRING, version INT, n_files INT,"
-                               " reloptions STRING"
+        self._local_df(
+            "relname STRING, version INT, n_files INT, reloptions STRING",
+            tables_rows,
         ).createOrReplaceTempView("kb_tables")
-        self.spark.createDataFrame(
-            cols_rows or [], "relname STRING, attname STRING, atttype STRING,"
-                             " attnotnull BOOLEAN, attnum INT"
+        self._local_df(
+            "relname STRING, attname STRING, atttype STRING,"
+            " attnotnull BOOLEAN, attnum INT",
+            cols_rows,
         ).createOrReplaceTempView("kb_columns")
-        from kuibadb_spark.gucs import GUCS, _fmt as _gfmt
+        from kuibadb_spark.gucs import GUCS
 
-        self.spark.createDataFrame(
-            [(n, _gfmt(self.gucs.show(n)), GUCS[n][0], GUCS[n][1])
-             for n in sorted(GUCS)],
+        self._local_df(
             "name STRING, setting STRING, vartype STRING, context STRING",
+            [(n, _guc_fmt(self.gucs.show(n)), GUCS[n][0], GUCS[n][1])
+             for n in sorted(GUCS)],
         ).createOrReplaceTempView("kb_settings")
+
+    def _local_df(self, ddl: str, rows: list[tuple]) -> DataFrame:
+        """A small driver-side result (command tags, DESCRIBE, SHOW, the
+        kb_* catalog views) as a local relation built from an Arrow
+        table: collecting it runs no Spark job, where createDataFrame
+        over a Python list is RDD-backed and runs one."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = T.StructType.fromDDL(ddl)
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+        return self.spark.createDataFrame(table, schema)

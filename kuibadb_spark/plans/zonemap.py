@@ -10,9 +10,12 @@ and the same trick Delta/Iceberg use for file skipping. Parquet row-group
 pruning still happens inside whatever files survive — this layer just
 keeps Spark from opening files that cannot match.
 
-Pruning is best-effort and NEVER affects correctness: the caller always
-re-applies the full predicate as a DataFrame filter; an unparseable
-conjunct or a column with no stats simply prunes nothing.
+Pruning is best-effort but must be SOUND: a read re-applies the full
+predicate as a DataFrame filter, yet DELETE/UPDATE carry a pruned file
+into the next version untouched, so a file holding a matching row must
+never be pruned. Only top-level AND/OR split the predicate (not inside
+quotes, parentheses or CASE … END); an unparseable or NOT conjunct, or a
+column with no (or NaN) stats, simply prunes nothing.
 
 At 100 TB the stats read is the scale risk, not the data: stats come from
 file footers only (one footer read per new file, at commit, for files the
@@ -30,15 +33,19 @@ import re
 _STATTYPES = (int, float, str)
 
 
-def collect_file_stats(files: list[str]) -> dict:
-    """{file -> {col -> [min, max]}} for int/float/string columns with
-    parquet statistics. Columns with missing/odd-typed stats are omitted
-    (omitted ⇒ never pruned on)."""
+def collect_file_stats(files: list[str]) -> tuple[dict, int]:
+    """({file -> {col -> [min, max]}}, total row count) for int/float/
+    string columns with parquet statistics. Columns with missing,
+    odd-typed or NaN stats are omitted (omitted ⇒ never pruned on). The
+    row count comes from the same footers, so a writer learns how many
+    rows it wrote without a count() job."""
     import pyarrow.parquet as pq
 
     out: dict = {}
+    rows = 0
     for path in files:
         md = pq.ParquetFile(path).metadata
+        rows += md.num_rows
         per_col: dict = {}
         ok: set = set()
         for rg in range(md.num_row_groups):
@@ -53,6 +60,9 @@ def collect_file_stats(files: list[str]) -> dict:
                     or not isinstance(st.min, _STATTYPES)
                     or not isinstance(st.max, _STATTYPES)
                     or isinstance(st.min, bool)
+                    # a NaN bound compares false against everything
+                    or st.min != st.min
+                    or st.max != st.max
                 ):
                     per_col.pop(name, None)
                     ok.discard(name)
@@ -64,7 +74,7 @@ def collect_file_stats(files: list[str]) -> dict:
                     per_col[name][0] = min(per_col[name][0], st.min)
                     per_col[name][1] = max(per_col[name][1], st.max)
         out[path] = per_col
-    return out
+    return out, rows
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +83,8 @@ def collect_file_stats(files: list[str]) -> dict:
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 _NUM = r"-?\d+(?:\.\d+)?"
-_STR = r"'(?:[^'])*'"
+# no backslash or embedded quote: those need unescaping to compare right
+_STR = r"'[^'\\]*'"
 _LIT = f"(?:{_NUM}|{_STR})"
 
 _CMP_RE = re.compile(
@@ -86,8 +97,8 @@ _IN_RE = re.compile(
     rf"^\s*({_IDENT})\s+IN\s*\(\s*({_LIT}(?:\s*,\s*{_LIT})*)\s*\)\s*$",
     re.IGNORECASE,
 )
-_AND_SPLIT = re.compile(r"\bAND\b", re.IGNORECASE)
-_OR_SPLIT = re.compile(r"\bOR\b", re.IGNORECASE)
+_WORD_RE = re.compile(r"[A-Za-z0-9_]+")
+_NOT_RE = re.compile(r"^\s*NOT\b", re.IGNORECASE)
 
 
 def _lit(tok: str):
@@ -97,21 +108,65 @@ def _lit(tok: str):
     return float(tok) if "." in tok else int(tok)
 
 
+def _split_top(where: str, kw: str) -> list[str] | None:
+    """Split `where` on the keyword `kw` (AND / OR) only where it stands
+    at the top level: outside quotes ('…', "…", `…`), parentheses and
+    CASE … END. The AND that closes a top-level BETWEEN stays inside its
+    piece. None when the text can't be split safely (a comment, or
+    unbalanced quotes, parentheses or CASE)."""
+    pieces: list[str] = []
+    start = depth = i = 0
+    between = False
+    n = len(where)
+    while i < n:
+        if depth < 0:
+            return None
+        c = where[i]
+        if c in "'\"`":
+            j = i + 1
+            while j < n and where[j] != c:
+                j += 2 if where[j] == "\\" and c != "`" else 1
+            if j >= n:
+                return None
+            i = j + 1
+            continue
+        if where.startswith(("--", "/*"), i):
+            return None
+        m = _WORD_RE.match(where, i)
+        if m:
+            word = m.group().upper()
+            if word == "CASE":
+                depth += 1
+            elif word == "END":
+                depth -= 1
+            elif depth == 0 and word == "BETWEEN":
+                between = True
+            elif depth == 0 and word == kw:
+                if kw == "AND" and between:
+                    between = False
+                else:
+                    pieces.append(where[start:i])
+                    start = m.end()
+            i = m.end()
+            continue
+        if c in "()":
+            depth += 1 if c == "(" else -1
+        i += 1
+    if depth != 0:
+        return None
+    pieces.append(where[start:])
+    return pieces
+
+
 def parse_conjuncts(where: str) -> list[tuple[str, str, object, object]]:
     """Parse `a < 5 AND b BETWEEN 1 AND 2 AND c = 'x'` into
-    [(col, op, lo, hi), …]; conjuncts that don't fit the grammar are
-    skipped (= prune nothing for them). BETWEEN splits are re-assembled
-    by lookahead since AND is both separator and BETWEEN syntax."""
-    parts = _AND_SPLIT.split(where)
+    [(col, op, lo, hi), …]. Only top-level conjuncts count (_split_top);
+    a conjunct that doesn't fit the grammar, or is a NOT, is skipped
+    (= prune nothing for it)."""
     out: list[tuple[str, str, object, object]] = []
-    i = 0
-    while i < len(parts):
-        piece = parts[i]
-        # BETWEEN consumed its AND: stitch the next part back on
-        if re.search(r"\bBETWEEN\b", piece, re.IGNORECASE) and i + 1 < len(parts):
-            piece = f"{piece} AND {parts[i + 1]}"
-            i += 1
-        i += 1
+    for piece in _split_top(where, "AND") or []:
+        if _NOT_RE.match(piece):
+            continue
         m = _BETWEEN_RE.match(piece)
         if m:
             out.append((m.group(1), "between", _lit(m.group(2)), _lit(m.group(3))))
@@ -148,6 +203,11 @@ def _may_match(stats: dict, col: str, op: str, v, v2) -> bool:
     lo, hi = stats[col]
     if not _comparable(lo, v):
         return True
+    if isinstance(hi, float) and op in (">", ">="):
+        # NaN sorts above every number in Spark, so it satisfies > and >=,
+        # but parquet min/max leave NaN out (NaN-valued bounds are never
+        # collected: collect_file_stats)
+        return True
     if op == "=":
         return lo <= v <= hi
     if op == "<":
@@ -172,13 +232,13 @@ def prune(files: list[str], stats_by_file: dict, where: str) -> list[str]:
     grammar can't parse prune nothing). Files absent from stats_by_file
     are always kept.
 
-    Top-level OR splits into disjuncts and keeps the UNION of each
-    disjunct's survivors — sound even when parentheses defeat the
-    textual split, because any piece the grammar can't parse keeps every
-    file, and the union only ever grows the kept set. (SQL precedence —
-    AND binds tighter than OR — matches the textual split for the
-    paren-free case.)"""
-    disjuncts = _OR_SPLIT.split(where)
+    A top-level OR (_split_top: not inside quotes, parentheses or
+    CASE … END) splits into disjuncts and keeps the UNION of each
+    disjunct's survivors; SQL precedence (AND binds tighter than OR)
+    matches that split."""
+    disjuncts = _split_top(where, "OR")
+    if disjuncts is None:
+        return list(files)
     if len(disjuncts) > 1:
         keep: set = set()
         for d in disjuncts:

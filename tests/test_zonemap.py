@@ -35,6 +35,67 @@ def test_parse_conjuncts():
     assert len(got) == 4  # the function-call conjunct is skipped
 
 
+def test_parse_conjuncts_splits_only_top_level_and():
+    """AND inside NOT (…), parentheses, CASE … END, quotes or a comment
+    is not a conjunct separator: none of these pieces may prune."""
+    for where in (
+        "NOT (a = 1 AND b = 2 AND c = 3)",
+        "s <> 'k AND a = 3 AND k'",
+        "CASE WHEN a = 1 AND b = 2 AND c = 3 THEN false ELSE true END",
+        "a <> 1 -- AND b = 2",
+        r"s <> 'x\' AND b = 2 AND \'y'",
+    ):
+        assert zonemap.parse_conjuncts(where) == [], where
+    # a NOT conjunct is skipped, its neighbours still count
+    assert zonemap.parse_conjuncts("a = 1 AND NOT b = 2 AND c = 3") == [
+        ("a", "=", 1, None), ("c", "=", 3, None)]
+    # a quoted AND stays inside its literal
+    assert zonemap.parse_conjuncts("s = 'k AND a = 3' AND b = 2") == [
+        ("s", "=", "k AND a = 3", None), ("b", "=", 2, None)]
+    stats = {"f1": {"a": [5, 9]}, "f2": {"a": [0, 4]}}
+    # an OR inside quotes or parentheses is not a disjunct separator
+    assert zonemap.prune(["f1", "f2"], stats,
+                         "a < 5 AND (s = 'x' OR a > 100)") == ["f2"]
+    assert zonemap.prune(["f1", "f2"], stats, "a < 5 AND s = 'x OR y'") \
+        == ["f2"]
+
+
+def test_nan_bounds_are_not_collected(monkeypatch):
+    """Some writers store NaN as a double column's min or max. A NaN
+    bound compares false against every literal, so such a column must be
+    left out of the zone map rather than prune `x < 5` wrongly."""
+    import pyarrow.parquet as pq
+
+    class Stats:
+        has_min_max = True
+        min, max = float("nan"), 1.0
+
+    class Col:
+        path_in_schema = "x"
+        statistics = Stats()
+
+    class RowGroup:
+        num_columns = 1
+
+        def column(self, i):
+            return Col()
+
+    class Meta:
+        num_rows, num_row_groups = 2, 1
+
+        def row_group(self, i):
+            return RowGroup()
+
+    class File:
+        def __init__(self, path):
+            self.metadata = Meta()
+
+    monkeypatch.setattr(pq, "ParquetFile", File)
+    stats, rows = zonemap.collect_file_stats(["f"])
+    assert (stats, rows) == ({"f": {}}, 2)
+    assert zonemap.prune(["f"], stats, "x < 5") == ["f"]
+
+
 def test_prune_logic():
     stats = {
         "f1": {"a": [0, 9], "s": ["aa", "mm"]},
@@ -326,3 +387,29 @@ def test_scan_stats_reports_pruning(spark, tmp_path):
     assert engine.scan_stats("zs")["files_pruned"] == 0
     # and the pruned read still answers correctly
     assert engine.table("zs", where="k = 7").count() == 1
+
+
+def _three_files(engine, tmp_path):
+    """Three files with disjoint b ranges; none of them holds b = 2."""
+    engine.create_table("t", "a INT, b INT, c INT, s STRING")
+    for lo in (10, 20, 30):
+        engine.copy_from(
+            "t",
+            _write(tmp_path, f"b{lo}.txt",
+                   [f"{i % 4}|{lo + i}|{i % 3}|r{lo + i}" for i in range(10)]),
+            delimiter="|",
+        )
+
+
+@pytest.mark.parametrize("where", [
+    "NOT (a = 1 AND b = 2 AND c = 3)",
+    "s <> 'k AND b = 2 AND k'",
+])
+def test_nested_and_never_prunes_reads_or_deletes(engine, tmp_path, where):
+    """Every row satisfies these predicates, though `b = 2` (true of no
+    file) appears between two ANDs: a read returns every row and a
+    DELETE removes every row."""
+    _three_files(engine, tmp_path)
+    assert engine.table("t", where=where).count() == 30
+    assert engine.delete("t", where) == 30
+    assert engine.table("t").count() == 0

@@ -11,7 +11,8 @@ parallel 1 / 8 / 32 — the reference's `COPY … PARALLEL n` axis
 repartition width of the distributed read) — plus the CSV dialect at
 32. Writes INGEST.json at the repo root (round-8 judge ask #5: the one
 reference workload that had no committed performance evidence), tracked
-round-over-round like BENCH_DETAIL.json, and prints one JSON line.
+round-over-round like the BENCH_DETAIL_c{N}.json files, and prints one
+JSON line.
 """
 
 from __future__ import annotations

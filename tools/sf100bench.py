@@ -93,6 +93,7 @@ SF100_SUPERLINEAR_OK: dict[str, tuple[float, str]] = {
 
 
 def main() -> int:
+    import bench
     from genfixture import build
 
     spark = get_spark("kuibadb-sf100bench")
@@ -122,7 +123,7 @@ def main() -> int:
     base: dict[str, float] = {}
     base_build: dict[str, float] = {}
     try:
-        with open(ROOT / "BENCH_DETAIL.json") as f:
+        with open(bench.detail_path()) as f:
             d = json.load(f)
             base = d.get("queries", {})
             base_build = d.get("build", {})
@@ -204,7 +205,8 @@ def main() -> int:
         "per_key_ceilings": {
             n: c for n, (c, _) in SF100_SUPERLINEAR_OK.items()
         },
-        "basis": "build+query per key vs BENCH_DETAIL.json sf0.1 totals;"
+        "basis": "build+query per key vs BENCH_DETAIL_c{N}.json (this"
+                 " run's core count) sf0.1 totals;"
                  " timings/queries/value are FIRST readings (retries feed"
                  " only the alarm decision); build-phase noise is not"
                  " retried",

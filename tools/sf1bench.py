@@ -12,7 +12,7 @@ gives every doc/vector N−1 identical twins, inflating every
 dedup-family pair count by the shard factor) with the same measurement
 discipline as bench.py (adaptive best-of-N steady-state, one-time
 eager-build cost split out) and writes BENCH_SF1_DETAIL.json, a
-per-round artifact committed next to BENCH_DETAIL.json.
+per-round artifact committed next to the BENCH_DETAIL_c{N}.json twins.
 
 Drift rule (recorded in the artifact, checked here):
 - aggregate: steady-state total at sf1-class is expected at ≈×6.6 of
@@ -26,8 +26,9 @@ Drift rule (recorded in the artifact, checked here):
   minimum work the exact answer requires (output must stay bounded —
   the quadratic-OUTPUT class is retired, round 9).
 
-Reads BENCH_DETAIL.json for the sf0.1 side (run `python bench.py`
-first in the same round so both sides share an environment epoch).
+Reads the sf0.1 side from BENCH_DETAIL_c{N}.json, N = this run's core
+count (run `python bench.py` first in the same round so both sides
+share an environment epoch and a core count).
 """
 
 from __future__ import annotations
@@ -121,7 +122,7 @@ def main() -> int:
     base: dict[str, float] = {}
     base_build: dict[str, float] = {}
     try:
-        with open(ROOT / "BENCH_DETAIL.json") as f:
+        with open(bench.detail_path()) as f:
             d = json.load(f)
             base = d.get("queries", {})
             base_build = d.get("build", {})
